@@ -14,14 +14,19 @@ object ExplainAudit {
     // longer fits the broadcast threshold at 100× the data)
     val bcast =
       if (sys.env.get("SPARK_GRAFT_NO_BROADCAST").contains("1")) "-1" else "10485760"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
+    // the session Bench and Verify run: SPARK_GRAFT_CPUS cores (and
+    // SPARK_GRAFT_MASTER) through ClusterMode, the catalog's object-hash
+    // threshold and the engine's functions and optimizer rules
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val spark = ClusterMode.configure(SparkSession.builder(), cpus)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.autoBroadcastJoinThreshold", bcast)
       .config("spark.ui.enabled", "false")
+      .config("spark.graft.objectHashFallbackThreshold", (1 << 22).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    GraftExtensions.register(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

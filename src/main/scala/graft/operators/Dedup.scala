@@ -456,33 +456,21 @@ object Dedup {
   def clusterPairs(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
       maxRounds: Int = 100): DataFrame = {
     val spark = pairs.sparkSession
-    val (edges, nDirected) = graft.Materialize.withAgg(
+    val edges = graft.Materialize(
       pairs.select(col(idA).as("src"), col(idB).as("dst"))
         .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-        .distinct(), _.count())
-    // Small-graph route: label propagation costs ~(2 + log diameter) JOBS,
-    // each a fixed scheduling round-trip — the dominant cost when the pair
-    // graph is small (near-dup edges after exact verify are a vanishing
-    // fraction of any corpus; r19 probe: ~20 sub-30 ms jobs carried half of
-    // image_dedup_canonical). Below the config bound the edge list is a
-    // bounded driver artifact (the Lloyd-round pattern): collect it, run
-    // union-find, and hand back a one-job frame. Same min-id labels —
-    // union-find components ARE connected components, and the label is the
-    // component min either way. LongType ids only (every catalog caller);
-    // anything else keeps the distributed route.
-    val localMax = spark.conf.getOption("spark.graft.clusterPairsLocalMaxEdges")
-      .map(_.toLong).getOrElse(1L << 20)
-    val srcType = edges.schema("src").dataType
-    // null endpoints keep the distributed route: its join semantics define
-    // what null-keyed edges do (they drop out of neighborMin), while the
-    // union-find's getLong would throw — the routes must be output-identical
-    // on ANY input, not just the catalog's
-    val localRows: Option[Array[org.apache.spark.sql.Row]] =
-      if (nDirected <= 2L * localMax && srcType == org.apache.spark.sql.types.LongType
-          && edges.schema("dst").dataType == srcType) {
-        val r = edges.collect()
-        if (r.exists(x => x.isNullAt(0) || x.isNullAt(1))) None else Some(r)
-      } else None
+        .distinct())
+    // Small-graph route (DriverRoute): label propagation costs ~(2 + log
+    // diameter) JOBS, each a fixed scheduling round-trip — the dominant
+    // cost when the pair graph is small (near-dup edges after exact verify
+    // are a vanishing fraction of any corpus; r19 probe: ~20 sub-30 ms jobs
+    // carried half of image_dedup_canonical). Below the bound the edge list
+    // is collected and union-find labels it: union-find components ARE
+    // connected components, and the label is the component min either way.
+    // LongType ids only (every catalog caller); anything else keeps the
+    // distributed route.
+    val longIds = edges.schema.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    val localRows = if (longIds) DriverRoute.boundedCollect(edges) else None
     if (localRows.isDefined) {
       val rows = localRows.get
       val idx = new scala.collection.mutable.LongMap[Int](rows.length * 2)
@@ -515,10 +503,7 @@ object Dedup {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("cluster_id", org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out,
-          math.max(1, math.min(spark.sparkContext.defaultParallelism,
-            1 + out.length / 65536))), schema)
+      return DriverRoute.localFrame(spark, out, schema)
     }
     // `barrier` is the materialized frame of the current round (the thing
     // release() must see — NOT a projection of it); `labels` the

@@ -46,36 +46,24 @@ object LinkAnalysis {
     require(damping > 0 && damping < 1,
       s"pageRank: damping must be in (0,1), got $damping")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // Small-graph route (the clusterPairs/BPE/Lloyd discipline): below the
-    // config bound the edge list is a bounded driver artifact — collect it
-    // once and run the `iterations` rounds locally. The distributed loop
-    // costs ~6 scheduler jobs PER ROUND at bench SF (AQE stage
-    // materializations + a fresh broadcast build of the static edge table
-    // every round), all fixed scheduling cost; locally the same recurrence
-    // is a tight array loop. The recurrence is replicated exactly —
-    // pr'(v) = (1-d)/n + d·(csum(v) + dmass/n), dmass re-derived from the
+    // Small-graph route (DriverRoute): below the bound the edge list is
+    // collected once and the `iterations` rounds run locally. The
+    // distributed loop costs ~6 scheduler jobs PER ROUND at bench SF (AQE
+    // stage materializations + a fresh broadcast build of the static edge
+    // table every round), all fixed scheduling cost; locally the same
+    // recurrence is a tight array loop. The recurrence is replicated exactly
+    // — pr'(v) = (1-d)/n + d·(csum(v) + dmass/n), dmass re-derived from the
     // NEW ranks each round — with contributions accumulated in sorted
     // (src, dst) edge order; double reduction order is canonical here where
     // the distributed sum's partial-merge order is partition-dependent, so
     // values can drift in the last ulp between routes (the catalog row
     // rounds at 8dp; LinkAnalysisSpec pins both routes to the scalar model
     // at 1e-9; a r13 cross-engine sweep already tolerates DuckDB's own
-    // reduction order). LongType ids and null-free edges only — anything
-    // else keeps the distributed rounds. An empty local edge list still
-    // REQUIREs below (same contract as the distributed route).
-    val localMax = edges.sparkSession.conf
-      .getOption("spark.graft.pageRankLocalMaxEdges")
-      .map(_.toLong).getOrElse(1L << 20)
-    val longIds = e.schema("src").dataType == org.apache.spark.sql.types.LongType &&
-      e.schema("dst").dataType == org.apache.spark.sql.types.LongType
-    val localEdges: Option[Array[org.apache.spark.sql.Row]] =
-      if (longIds && localMax > 0 && localMax < Int.MaxValue) {
-        val r = e.limit(localMax.toInt + 1).collect()
-        if (r.length > localMax || r.exists(x => x.isNullAt(0) || x.isNullAt(1)))
-          None
-        else Some(r)
-      } else None
-    localEdges match {
+    // reduction order). LongType ids only — anything else keeps the
+    // distributed rounds. An empty local edge list still REQUIREs below
+    // (same contract as the distributed route).
+    val longIds = e.schema.forall(_.dataType == org.apache.spark.sql.types.LongType)
+    (if (longIds) DriverRoute.boundedCollect(e) else None) match {
       case Some(rows) => return pageRankLocal(
         edges.sparkSession, rows, iterations, damping)
       case None =>
@@ -177,10 +165,7 @@ object LinkAnalysis {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("pagerank",
         org.apache.spark.sql.types.DoubleType)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + out.length / 65536))), schema)
+    DriverRoute.localFrame(spark, out, schema)
   }
 
   /**

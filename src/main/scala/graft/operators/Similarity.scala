@@ -510,8 +510,8 @@ object Similarity {
   }
 
   /** Corpus-scaled seeding/training sample modulus: keeps the farthest-first
-   * hash sample inside the driver-local cap (`seedFarthestFirst`'s
-   * `maxDriverSample`), where the k seeding rounds are one collect instead
+   * hash sample inside the driver-local cap (`seedFarthestFirst`'s element
+   * budget), where the k seeding rounds are one collect instead
    * of k sequential cluster jobs — at corpus-scaled cell counts (hundreds+
    * of seeds) the distributed fallback is hundreds of driver round-trips. */
   def autoSampleMod(n: Long, targetSample: Long = 1L << 16): Int =
@@ -944,51 +944,36 @@ object Similarity {
    * sample, then k tiny jobs; at 100 TB the sample is the only thing that
    * grows with data and stays bounded by choosing sampleMod ∝ corpus/50k.
    *
-   * When the sample fits `maxDriverSample` rows it is collected ONCE and the
-   * k rounds run driver-local — k sequential cluster barriers (the real cost
-   * of this loop: each round is a full job round-trip, whatever the data
-   * size) collapse into one collect. The local loop mirrors the distributed
-   * formulation's arithmetic and ordering EXACTLY (same double-accumulation
-   * order as the codegen'd max-cosine, NaN-is-greatest, min-(sim, id)
-   * tie-break — SeedingSpec pins path equality), so which path ran is
-   * unobservable in the output. Oversized samples, null ids/vectors, or
-   * non-orderable id types fall back to the distributed rounds.
+   * When the sample fits the [[DriverRoute]] bound and an element budget
+   * (below) it is collected ONCE and the k rounds run driver-local — k
+   * sequential cluster barriers (the real cost of this loop: each round is
+   * a full job round-trip, whatever the data size) collapse into one
+   * collect. The local loop mirrors the distributed formulation's
+   * arithmetic and ordering EXACTLY (same double-accumulation order as the
+   * codegen'd max-cosine, NaN-is-greatest, min-(sim, id) tie-break —
+   * SeedingSpec pins path equality), so which path ran is unobservable in
+   * the output. Oversized or empty samples, null ids/vectors, or
+   * non-orderable id types take the distributed rounds.
    */
   def seedFarthestFirst(df: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, sampleMod: Int = 1,
-      maxDriverSample: Int = 1 << 17): DataFrame = {
+      nCells: Int, sampleMod: Int = 1): DataFrame = {
     val sampleDf = df.filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
       .select(col(idCol).as("cand_id"), col(vecCol).as("cand_vec"))
     val idType = sampleDf.schema("cand_id").dataType
-    // dim-aware cap: the row cap alone admits collects whose BOXED float
-    // payload (~16 B/element) exceeds driver heap at realistic dims —
-    // budget total elements (rows × dim ≤ maxDriverSample × 64) instead.
-    // ONE collect for probe + sample (was a dim-probe job plus a sample
-    // job): collect up to maxDriverSample+1 rows, read dim off the first
-    // row, and derive the dim-aware cap from it. Only when the cap turns
-    // out LARGER than the first collect (dim < 64) and the first collect
-    // hit its limit is a second, wider collect needed — never for the
-    // catalog's dim-64 corpora.
-    def sampleRows(limit: Long): Array[org.apache.spark.sql.Row] = {
-      val rows = sampleDf.limit((math.min(limit, Int.MaxValue - 1L) + 1L).toInt).collect()
-      require(rows.nonEmpty,
-        s"seedFarthestFirst: hash sample is empty (sampleMod=$sampleMod too coarse?)")
-      rows
-    }
+    // dim-aware element budget: a row cap alone admits collects whose BOXED
+    // float payload (~16 B/element) exceeds driver heap at realistic dims,
+    // so the local route takes rows × dim ≤ 2^23 elements (but never fewer
+    // than 1,024 rows). The probe collects at most the budget's rows at
+    // dim 64 — the catalog's dim — so a larger sample goes distributed at
+    // any dim; dim is read off the first collected row.
+    val maxElems = 1L << 23
     val localSeeds: Option[Seq[(Any, Array[Float])]] =
       idOrdering(idType).flatMap { ord =>
-        val first = sampleRows(maxDriverSample.toLong)
-        val dim =
-          if (first(0).isNullAt(1)) 64
-          else math.max(1, first(0).getSeq[Float](1).length)
-        val rowCap = math.max(1024L, maxDriverSample.toLong * 64L / dim)
-        val rows =
-          if (first.length > maxDriverSample && rowCap > maxDriverSample)
-            sampleRows(rowCap)
-          else first
-        if (rows.length > rowCap || rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
-        else Some(farthestFirstLocal(
-          rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)), nCells, ord))
+        DriverRoute.boundedCollect(sampleDf, maxElems / 64)
+          .filter(rows => rows.nonEmpty && rows.length <=
+            math.max(1024L, maxElems / math.max(1, rows(0).getSeq[Float](1).length)))
+          .map(rows => farthestFirstLocal(
+            rows.map(r => (r.get(0), r.getSeq[Float](1).toArray)), nCells, ord))
       }
     localSeeds match {
       case Some(seeds) => seedFrame(df, seeds, idType)
@@ -1143,9 +1128,8 @@ object Similarity {
       org.apache.spark.sql.types.StructField("cell_id", idType),
       org.apache.spark.sql.types.StructField("cvec",
         ArrayType(FloatType, containsNull = false))))
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(seeds.map(s =>
-        org.apache.spark.sql.Row(s._1, s._2.toSeq)): _*), schema)
+    DriverRoute.localFrame(df.sparkSession,
+      seeds.map(s => org.apache.spark.sql.Row(s._1, s._2.toSeq)), schema)
   }
 
   /**
@@ -1428,8 +1412,7 @@ object Similarity {
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("cvec",
         ArrayType(FloatType))))
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(relabeled: _*), schema)
+    DriverRoute.localFrame(df.sparkSession, relabeled.toSeq, schema)
   }
 
   /** The per-subspace seed pick [[pqTrain]] collects before its driver-side

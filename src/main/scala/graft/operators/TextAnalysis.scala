@@ -363,6 +363,13 @@ object TextAnalysis {
 
   // --------------------------------------- within-document paragraph dedup
 
+  /** Keep element i iff its first index in the array is i (first-occurrence
+   * filter; stable, order-preserving). */
+  def keepFirstOccurrence(paras: Column): Column =
+    filter(paras, (p, i) => array_position(paras, p) === i + 1)
+
+  def splitParagraphs(text: Column): Column = split(text, "\\n{2,}")
+
   /**
    * Within-document repetition removal: split on blank lines (1+ consecutive
    * newlines beyond the first), keep each paragraph's FIRST occurrence
@@ -372,19 +379,9 @@ object TextAnalysis {
    * List-ops formulation (keep element i iff its first index is i) — the
    * higher-order functions are interpreted, but the work is O(paragraphs²)
    * per document on SHORT arrays, entirely map-side, and stays linear in
-   * documents at 100 TB.
+   * documents at 100 TB. Adds `text_dedup` and the paragraph counts
+   * before and after.
    */
-  /** Keep element i iff its first index in the array is i (first-occurrence
-   * filter; stable, order-preserving). */
-  def keepFirstOccurrence(paras: Column): Column =
-    filter(paras, (p, i) => array_position(paras, p) === i + 1)
-
-  def dedupParagraphs(paras: Column): Column =
-    array_join(keepFirstOccurrence(paras), "\n\n")
-
-  def splitParagraphs(text: Column): Column = split(text, "\\n{2,}")
-
-  /** `text_dedup` + paragraph counts before/after. */
   def withParagraphDedup(df: DataFrame, textCol: String = "text"): DataFrame = {
     val paras = splitParagraphs(col(textCol))
     val kept = keepFirstOccurrence(paras)
@@ -443,14 +440,6 @@ object TextAnalysis {
   }
 
   // ------------------------------------- perplexity-proxy quality scoring
-
-  /** Character trigrams of a text column — the codegen'd
-   * [[graft.functions.CharNgrams]] one-pass expression (codepoint windows,
-   * short docs → empty array). The `transform(sequence(...), substr)`
-   * formulation it replaced evaluated interpreted per character and was
-   * the bench's slowest extraction pass. */
-  def charTrigrams(text: Column): Column =
-    graft.functions.HashExpressions.charNgrams(text, 3)
 
   /**
    * Perplexity-proxy quality score without an external model (the CCNet

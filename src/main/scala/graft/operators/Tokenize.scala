@@ -54,29 +54,18 @@ object Tokenize {
       .select(explode(TextAnalysis.tokens(lower(col(textCol)))).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    // Small-vocab route (the clusterPairs/Lloyd discipline): every merge
-    // round is a driver-synchronized job over the VOCAB table — a
-    // scheduling round-trip per merge, which dominates when the vocab is
-    // small. The vocab is (distinct word, count): below the config bound
-    // it is a bounded driver artifact — collect once, run the rounds
-    // locally. Merges are IDENTICAL by construction: pair counts are
-    // exact long sums (order-independent), the argmax tie-break
-    // (pair_n desc, l, r) and the greedy left-to-right non-overlapping
-    // fuse are replicated verbatim. Larger vocabs keep the distributed
-    // per-round loop below.
-    // clamped so `localMax + 1` cannot overflow Int when the conf is set to
-    // Int.MaxValue. The over-cap probe deliberately stays the one-job
-    // limit+collect (≤ localMax+1 (word,count) rows — tens of MB, bounded):
-    // a count-first probe would cost the SMALL-vocab route (every catalog
-    // caller) a second vocab-aggregate job to save the large-vocab route
-    // one, the wrong side of the trade for a bound that exists to keep the
-    // common case at one job.
-    val localMax = math.min(Int.MaxValue - 1,
-      spark.conf.getOption("spark.graft.bpeLocalMaxVocab")
-        .map(_.toLong).getOrElse(1L << 20)).toInt
-    val localVocab = vocabDf.limit(localMax + 1).collect()
-    if (localVocab.length <= localMax) {
-      var words = localVocab.map(r => (r.getString(0).split(""), r.getLong(1)))
+    // Small-vocab route (DriverRoute): every merge round is a
+    // driver-synchronized job over the VOCAB table — a scheduling
+    // round-trip per merge, which dominates when the vocab is small. The
+    // vocab is (distinct word, count): below the bound it is collected once
+    // and the rounds run locally. Merges are IDENTICAL by construction: pair
+    // counts are exact long sums (order-independent), the argmax tie-break
+    // (pair_n desc, l, r) and the greedy left-to-right non-overlapping fuse
+    // are replicated verbatim. Larger vocabs keep the distributed per-round
+    // loop below.
+    val localVocab = DriverRoute.boundedCollect(vocabDf)
+    if (localVocab.isDefined) {
+      var words = localVocab.get.map(r => (r.getString(0).split(""), r.getLong(1)))
       val merges = scala.collection.mutable.ListBuffer
         .empty[(Int, String, String, String, Long)]
       var round = 0

@@ -35,7 +35,7 @@ import org.apache.spark.util.SerializableConfiguration
  *    commit message; speculative/retried tasks stage distinct files and
  *    Spark's commit coordinator picks one winner.
  *  - '''Driver commit''': renames the winning segments into `segments/`,
- *    then atomically rewrites `_manifest.json` (tmp + rename) adding one
+ *    then publishes the next `_commits/` manifest version adding one
  *    epoch entry. Readers see ONLY manifest-listed segments, so a crashed
  *    or aborted write is invisible — no half-visible batches, ever.
  *  - '''Streaming epoch idempotence''': `StreamingWrite.commit(epochId)`
@@ -116,7 +116,6 @@ object KvStore {
   // ---- store layout helpers (driver side) ----
 
   private[v2] def schemaFile(path: String) = new Path(path, "_schema.json")
-  private[v2] def manifestFile(path: String) = new Path(path, "_manifest.json")
   private[v2] def segmentsDir(path: String) = new Path(path, "segments")
   private[v2] def stagingDir(path: String) = new Path(path, "_staging")
 
@@ -279,9 +278,7 @@ object KvStore {
   // old single-writer last-writer-wins hazard entirely: concurrent
   // appends serialize, a replayed streaming epoch still hits its
   // idempotence tag, and readers always see a fully-written snapshot
-  // (version files are never modified after publish). Pre-OCC stores
-  // (bare `_manifest.json`) read as version 0 and upgrade on their next
-  // commit.
+  // (version files are never modified after publish).
 
   private[v2] def commitsDir(path: String) = new Path(path, "_commits")
 
@@ -321,7 +318,7 @@ object KvStore {
   }
 
   /** (current version, epochs): the highest `_commits/` version file, or
-   * the legacy `_manifest.json` as version 0 when no commit log exists. */
+   * version 0 with no epochs when no commit log exists. */
   private[v2] def readVersionedManifest(conf: Configuration, path: String): (Long, Seq[Epoch]) = {
     val dir = commitsDir(path)
     val fs = dir.getFileSystem(conf)
@@ -332,7 +329,7 @@ object KvStore {
           scala.util.Try(n.stripSuffix(".json").toLong).toOption else None)
     versions.maxOption match {
       case Some(v) => (v, parseManifest(conf, versionFile(path, v)))
-      case None => (0L, parseManifest(conf, manifestFile(path)))
+      case None => (0L, Seq.empty)
     }
   }
 
@@ -344,9 +341,9 @@ object KvStore {
     if (!fs.exists(f)) return Seq.empty
     val in = fs.open(f)
     val root = try new ObjectMapper().readTree(in) finally in.close()
-    val epochs = root.get("epochs").elements().asScala.map { e =>
-      // segment entries are plain names (pre-stats manifests) or
-      // {"name":…, "stats":{…}} objects — both remain readable forever
+    root.get("epochs").elements().asScala.map { e =>
+      // segment entries are plain names (what manifestBytes writes for a
+      // segment with no stats, dv or bloom) or {"name":…, "stats":{…}} objects
       val segs = e.get("segments").elements().asScala.map { s =>
         if (s.isTextual) Segment(s.asText(), None)
         else Segment(s.get("name").asText(),
@@ -360,38 +357,7 @@ object KvStore {
           w.fields().asScala.map(en => en.getKey -> en.getValue.asLong()).toMap
         }.getOrElse(Map.empty))
     }.toSeq
-    warnLegacyWriterScopes(f, epochs)
-    epochs
   }
-
-  /** MIGRATION (reserved replay prefixes): parseWriterTag once accepted ANY
-   * `<prefix>:<numeric>` tag into fold watermarks; it is now restricted to
-   * [[replayTagPrefixes]] so a caller-chosen colon-numeric tag (e.g. a
-   * backfill `load:20260101` after `load:20260815` folded) can never be
-   * silently dropped as a "replay". The flip side: a store whose manifest
-   * already carries a NON-reserved watermark scope was written by the old
-   * binary, and replays of that writer's folded batches are no longer
-   * absorbed — they re-commit as duplicates. Detect exactly that store
-   * shape at read time and warn once per scope; operators should drain the
-   * old writer (let its checkpoint pass the folded range) or compact the
-   * store before resuming it under this binary. */
-  private def warnLegacyWriterScopes(f: Path, epochs: Seq[Epoch]): Unit = {
-    val legacy = epochs.iterator.flatMap(_.writers.keysIterator)
-      .filterNot(s => replayTagPrefixes.exists(p => (s + ":").startsWith(p)))
-      .toSet
-    val fresh = legacy.diff(warnedLegacyScopes.get())
-    if (fresh.nonEmpty) {
-      warnedLegacyScopes.updateAndGet(_ ++ fresh)
-      System.err.println(s"[graft-kv] WARNING: manifest $f carries fold " +
-        s"watermark scope(s) ${fresh.mkString(", ")} outside the reserved " +
-        s"replay prefixes ${replayTagPrefixes.mkString(", ")} — written by a " +
-        "pre-restriction binary. Replays of those writers' folded batches " +
-        "are NO LONGER absorbed and would re-commit as duplicates; drain or " +
-        "re-tag the old writer before resuming it against this store.")
-    }
-  }
-  private val warnedLegacyScopes =
-    new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
 
   /** keep a short tail of old version files (debugging); each version
    * holds the FULL epoch list, so old versions carry no needed state */

@@ -332,10 +332,8 @@ class DedupSpec extends AnyFunSuite {
     } ++ (500L until 520L).map(i => (i, i + 1))).toDF("id_a", "id_b")
     def run(): Map[Long, Long] =
       Dedup.clusterPairs(pairs).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val driverRoute = run() // default threshold: small graph, union-find
-    spark.conf.set("spark.graft.clusterPairsLocalMaxEdges", "0")
-    val distributed = try run()
-      finally spark.conf.unset("spark.graft.clusterPairsLocalMaxEdges")
+    val driverRoute = run() // default bound: small graph, union-find
+    val distributed = TestSpark.withConf("spark.graft.driverRouteMaxRows", "0")(run())
     assert(driverRoute === distributed)
     // sanity: labels are component minima (canonical member of own cluster)
     val byCluster = driverRoute.toSeq.groupBy(_._2)

@@ -319,29 +319,6 @@ class KvStoreSpec extends AnyFunSuite {
     assert(KvStore.read(spark, p).select("_epoch").distinct().count() === 1)
   }
 
-  test("legacy single-manifest stores read as version 0 and upgrade on commit") {
-    import org.apache.spark.sql.types._
-    val p = tmp()
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = new org.apache.hadoop.fs.Path(p).getFileSystem(conf)
-    // hand-craft a pre-OCC store: _schema.json + bare _manifest.json
-    fs.mkdirs(new org.apache.hadoop.fs.Path(p, "segments"))
-    val schema = StructType(Seq(StructField("id", LongType)))
-    def put(name: String, content: String): Unit = {
-      val out = fs.create(new org.apache.hadoop.fs.Path(p, name), true)
-      out.write(content.getBytes("UTF-8")); out.close()
-    }
-    put("_schema.json", schema.json)
-    put("segments/seg-legacy.jsonl", "{\"id\":41}\n")
-    put("_manifest.json",
-      """{"epochs":[{"epoch":0,"tag":"legacy","segments":["seg-legacy.jsonl"]}]}""")
-    assert(KvStore.read(spark, p).collect().map(_.getLong(0)).toSeq === Seq(41L))
-    // next commit goes through the commit log; legacy rows stay visible
-    Seq(42L).toDF("id").write.format("graft-kv").option("path", p).mode("append").save()
-    assert(KvStore.read(spark, p).collect().map(_.getLong(0)).sorted.toSeq === Seq(41L, 42L))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(p, "_commits")))
-  }
-
   test("epoch changefeed: readStream tails committed epochs exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
     val p = tmp()

@@ -26,11 +26,11 @@ class MaterializeSpec extends AnyFunSuite {
     // these specs exercise the ITERATIVE (distributed) clusterPairs route;
     // without this the small test graphs take the driver union-find
     // shortcut and the per-round barrier machinery under test never runs
-    spark.conf.set("spark.graft.clusterPairsLocalMaxEdges", "0")
+    spark.conf.set("spark.graft.driverRouteMaxRows", "0")
     ckDir.foreach(spark.conf.set("spark.graft.checkpointDir", _))
     try f finally {
       spark.conf.unset("spark.graft.materialize")
-      spark.conf.unset("spark.graft.clusterPairsLocalMaxEdges")
+      spark.conf.unset("spark.graft.driverRouteMaxRows")
       spark.conf.unset("spark.graft.checkpointDir")
       spark.catalog.clearCache()
     }
@@ -94,23 +94,9 @@ class MaterializeSpec extends AnyFunSuite {
   }
 
   test("withAgg fuses barrier + reduction into ONE job (persist strategy)") {
-    class JobCount extends org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
+    import TestSpark.countJobs
     withStrategy("persist") {
       val src = spark.range(0, 1000L).selectExpr("id", "id % 7 as k")
-      def countJobs[A](f: => A): (A, Int) = {
-        val l = new JobCount
-        spark.sparkContext.addSparkListener(l)
-        try {
-          val r = f
-          Thread.sleep(500L) // settle the async listener bus (SkewAudit idiom)
-          (r, l.n.get())
-        } finally spark.sparkContext.removeSparkListener(l)
-      }
       // baseline: eager barrier THEN the reduction — two scheduled actions
       val (_, unfusedJobs) = countJobs {
         val b = Materialize(src)

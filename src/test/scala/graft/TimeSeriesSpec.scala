@@ -335,22 +335,11 @@ class TimeSeriesSpec extends AnyFunSuite {
         yield (u, i * 400L, 1000L + u * 10 + i)))
       .map { case (u, t, i) => (u, new java.sql.Timestamp(t * 1000L), i) }
       .toDF("user_id", "ts", "event_id")
-    class JobCount extends org.apache.spark.scheduler.SparkListener {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
     def probeJobsWhileBuilding(f: => org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame, Int) = {
-      val l = new JobCount
-      spark.sparkContext.addSparkListener(l)
-      try {
-        val df = f
-        df.queryExecution.executedPlan // force planning, still no action
-        Thread.sleep(500L) // settle the async listener bus (SkewAudit idiom)
-        (df, l.n.get())
-      } finally spark.sparkContext.removeSparkListener(l)
+        : (org.apache.spark.sql.DataFrame, Int) = TestSpark.countJobs {
+      val df = f
+      df.queryExecution.executedPlan // force planning, still no action
+      df
     }
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getAs[Long]("session_seq")) ->

@@ -54,10 +54,8 @@ class TokenizeSpec extends AnyFunSuite {
       Tokenize.bpeTrain(df, rounds = 6).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getString(3), r.getLong(4))).toSeq
-    val driver = run() // default threshold: small vocab, driver rounds
-    spark.conf.set("spark.graft.bpeLocalMaxVocab", "0")
-    val distributed = try run()
-      finally spark.conf.unset("spark.graft.bpeLocalMaxVocab")
+    val driver = run() // default bound: small vocab, driver rounds
+    val distributed = TestSpark.withConf("spark.graft.driverRouteMaxRows", "0")(run())
     assert(driver === distributed)
     assert(driver.nonEmpty)
   }

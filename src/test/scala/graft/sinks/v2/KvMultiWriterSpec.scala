@@ -207,29 +207,4 @@ class KvMultiWriterSpec extends AnyFunSuite {
       }
     }
   }
-
-  test("legacy (pre-restriction) watermark scopes are detected and warned once on read") {
-    // r15 ADVICE migration note: parseWriterTag once absorbed ANY
-    // colon-numeric tag into fold watermarks; now only reserved prefixes
-    // do. A manifest already carrying a non-reserved scope was written by
-    // the old binary and its folded batches would re-commit as duplicates
-    // on replay — the reader must say so, loudly, exactly once per scope.
-    val path = freshDir()
-    KvStore.mutateManifest(conf, path)(_ => Some(Seq(
-      KvStore.Epoch(1L, "stream:q:3", Seq.empty, 0L,
-        writers = Map("legacy-cdc-mwspec" -> 7L, "stream:q" -> 3L)))))
-    def readCapturing(): String = {
-      val buf = new java.io.ByteArrayOutputStream()
-      val old = System.err
-      System.setErr(new java.io.PrintStream(buf, true))
-      try KvStore.readManifest(conf, path) finally System.setErr(old)
-      buf.toString
-    }
-    val first = readCapturing()
-    assert(first.contains("legacy-cdc-mwspec") && first.contains("reserved"),
-      s"legacy scope not flagged: <$first>")
-    assert(!first.contains("stream:q,") && !first.contains("stream:q "),
-      s"reserved scope must not be flagged: <$first>")
-    assert(readCapturing().isEmpty, "warning must fire once per scope, not per read")
-  }
 }
